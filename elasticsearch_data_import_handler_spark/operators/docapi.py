@@ -118,6 +118,9 @@ def msearch(spark: SparkSession, reader, queries: dict[str, list[str]],
     WAND batch scorer (query-bucket balanced, single cogrouped shuffle),
     which is exactly what makes a search backend's msearch cheaper than N
     round-trips."""
+    import pyarrow as pa
+
+    from .scoring import local_relation, query_terms_df
     from .wand import bm25_topk_wand
 
     if not queries:
@@ -125,10 +128,10 @@ def msearch(spark: SparkSession, reader, queries: dict[str, list[str]],
     keys = sorted(queries)
     rows = [(i, t, int(k)) for i, key in enumerate(keys)
             for t in sorted(set(queries[key]))]
-    qterms = spark.createDataFrame(rows, "query_id int, term string, k int")
-    hits = bm25_topk_wand(spark, reader, qterms=qterms, round_to=round_to)
-    names = spark.createDataFrame(
-        [(i, key) for i, key in enumerate(keys)],
-        "query_id int, query_key string")
+    hits = bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows),
+                          round_to=round_to)
+    names = local_relation(
+        spark, enumerate(keys),
+        pa.schema([("query_id", pa.int32()), ("query_key", pa.string())]))
     return (hits.join(F.broadcast(names), "query_id")
             .select("query_key", "rank", "doc_id", "score"))

@@ -15,19 +15,38 @@ compressed index.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .indexing import bm25_score_expr
 
 
+_QTERMS_SCHEMA = pa.schema([("query_id", pa.int32()), ("term", pa.string()),
+                            ("k", pa.int32())])
+
+
+def local_relation(spark, rows, schema: pa.Schema) -> DataFrame:
+    """Driver-side rows → a DataFrame planned as a Catalyst ``LocalRelation``.
+
+    ``createDataFrame(list)`` builds an RDD-backed ``LogicalRDD``, and
+    collecting it launches a Spark job.  An Arrow table is handed to the JVM
+    as in-memory rows instead, so collecting it runs no job; this also holds
+    for zero rows, where ``createDataFrame(pandas)`` falls back to an RDD."""
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [[] for _ in schema]
+    return spark.createDataFrame(pa.table(cols, schema=schema))
+
+
 def query_terms_df(spark, rows=None) -> DataFrame:
-    """(query_id, term, k) — the broadcast side of the score join."""
+    """(query_id, term, k) — the broadcast side of the score join.
+
+    Must stay a ``LocalRelation`` (see ``local_relation``): every WAND
+    request collects its terms on the driver, which is free here but a
+    Spark job per request for an RDD-backed frame."""
     from ..queryset import query_term_rows
 
-    return spark.createDataFrame(
-        rows if rows is not None else query_term_rows(),
-        schema="query_id int, term string, k int",
-    )
+    return local_relation(
+        spark, rows if rows is not None else query_term_rows(), _QTERMS_SCHEMA)
 
 
 def score_bm25_join(qterms: DataFrame, tfreqs: DataFrame, lex: DataFrame,

@@ -2,12 +2,18 @@
 
 Query plan (SURVEY.md §3.4):
 
-  lexicon (pruned to query terms, broadcast)
+  query terms: a local relation (query_terms_df), so the driver-side read
+  of its term list runs no Spark job
+    → lexicon (pruned to query terms, broadcast)
     → postings scan, partition-pruned by bucket(term) + term filter
     → broadcast-join query terms onto posting rows
-    → groupBy(query_id, salt) [cogrouped with the tombstone frame keyed the
-      same way] .applyInPandas(score_shard)          ← the only shuffle
-    → global top-k merge (≤ S·k rows per query, window row_number)
+    → groupBy(query_id, salt) [cogrouped with the tombstone frame keyed by
+      (query bucket, salt)] .applyInPandas(score_shard)
+                                      ← the only shuffle of posting rows
+      each shard top-k row carries its query's k, so nothing joins k back
+    → global top-k merge (≤ S·k rows per query, window row_number, rank ≤ k)
+    → single-partition ordered merge of the ≤ Σk survivors:
+      repartition(1).sortWithinPartitions(query_id, rank) — no range sort
 
 Because every term's postings are sharded by the same doc-hash (build.py),
 the (query_id, salt) group holds a *complete, disjoint document subspace*:
@@ -44,7 +50,8 @@ from ..functions.varbyte import bm25_partial, decode_blocks
 
 _EMPTY_TOPK = pd.DataFrame({"query_id": pd.Series(dtype="int32"),
                             "doc_id": pd.Series(dtype="int64"),
-                            "score": pd.Series(dtype="float64")})
+                            "score": pd.Series(dtype="float64"),
+                            "k": pd.Series(dtype="int32")})
 
 
 def _score_shard(pdf: pd.DataFrame, ts_arr: np.ndarray | None) -> pd.DataFrame:
@@ -159,6 +166,7 @@ def _score_shard(pdf: pd.DataFrame, ts_arr: np.ndarray | None) -> pd.DataFrame:
         "query_id": np.full(idx.size, query_id, dtype=np.int32),
         "doc_id": uniq[idx],
         "score": totals[idx],
+        "k": np.full(idx.size, k, dtype=np.int32),
     })
 
 
@@ -191,9 +199,11 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
 
     if qterms is None:
         qterms = query_terms_df(spark)
-    # one bounded collect (|queries|×|terms| rows) feeds both the pruned
-    # postings scan and the query-bucket count — no extra jobs
-    qt_rows = qterms.select("query_id", "term").distinct().collect()
+    # one bounded driver read (|queries|×|terms| rows, deduped here rather
+    # than by a shuffling distinct) feeds both the pruned postings scan and
+    # the query-bucket count; on query_terms_df's LocalRelation it runs no
+    # Spark job
+    qt_rows = qterms.select("query_id", "term").collect()
     terms = sorted({r["term"] for r in qt_rows})
     n_queries = len({r["query_id"] for r in qt_rows})
     post = reader.postings_for_terms(terms)
@@ -203,7 +213,7 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     # BroadcastExchange + BroadcastNestedLoopJoin per query batch
     joined = post.join(F.broadcast(q_lex), "term").withColumn(
         "avgdl", F.lit(reader.avgdl_value()))
-    schema = "query_id int, doc_id bigint, score double"
+    schema = "query_id int, doc_id bigint, score double, k int"
     tomb = reader.tombstones_df()
     if tomb is None:
         shard_topk = joined.groupBy("query_id", "salt").applyInPandas(
@@ -237,17 +247,18 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
             .cogroup(tomb_keyed.groupBy("__ts_qbucket", "__ts_salt"))
             .applyInPandas(_score_cogrouped, schema=schema)
         )
-    with_k = shard_topk.join(
-        F.broadcast(qterms.select("query_id", "k").distinct()), "query_id")
     if candidates:
-        return with_k
+        return shard_topk
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     out = (
-        with_k
+        shard_topk
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= F.col("k"))
         .select("query_id", "rank", "doc_id", "score")
     )
     if round_to is not None:
         out = out.withColumn("score", F.round("score", round_to))
-    return out.orderBy("query_id", "rank")
+    # ≤ Σk rows survive the rank filter: one partition sorted locally keeps
+    # the (query_id, rank) order without orderBy's sampling job and range
+    # shuffle
+    return out.repartition(1).sortWithinPartitions("query_id", "rank")

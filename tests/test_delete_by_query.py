@@ -56,6 +56,29 @@ def _topk(spark, d):
             for r in bm25_topk_wand(spark, IndexReader(spark, d)).collect()}
 
 
+@pytest.mark.parametrize("k_mult", [1, 2])
+def test_wand_candidates_carry_input_k(spark, deleted_and_clean, k_mult):
+    """candidates=True returns (query_id, doc_id, score, k) with k taken
+    from the scorer's input rows, on the plain path (clean index) and the
+    tombstone-cogrouped path (deleted index) alike."""
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+
+    del_dir, clean_dir, _ = deleted_and_clean
+    qt = query_terms_df(spark)
+    qt = qt.withColumn("k", (F.col("k") * k_mult).cast("int"))
+    want = {r["query_id"]: r["k"] for r in qt.select("query_id", "k").collect()}
+    for d, tombstoned in ((clean_dir, False), (del_dir, True)):
+        reader = IndexReader(spark, d)
+        assert (reader.tombstones_df() is not None) == tombstoned
+        cand = bm25_topk_wand(spark, reader, qterms=qt, candidates=True)
+        assert cand.columns == ["query_id", "doc_id", "score", "k"]
+        rows = cand.collect()
+        assert rows
+        for r in rows:
+            assert r["k"] == want[r["query_id"]], (d, r)
+
+
 def test_delete_matches_clean_rebuild(spark, deleted_and_clean):
     del_dir, clean_dir, victims = deleted_and_clean
     got = _topk(spark, del_dir)

@@ -563,3 +563,46 @@ def test_search_after_broadcasts_cursor(spark):
     out.collect()
     plan = _plan(out)
     assert "BroadcastExchange" in plan
+
+
+def test_one_query_wand_request_job_budget(spark, tmp_path):
+    """A one-query WAND request's fixed cost: the query terms are a
+    LocalRelation (reading them runs no job), the request runs at most 6
+    Spark jobs on a warm reader, and the final (query_id, rank) order comes
+    from a single-partition local sort, not a range-partitioned one."""
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.operators.wand import (
+        bm25_topk_wand)
+    from elasticsearch_data_import_handler_spark.plans.build import (
+        IndexReader, build_index)
+    from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+
+    rows = [(0, "spark", 10), (0, "join", 10)]
+    optimized = query_terms_df(spark, rows)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert optimized.startswith("LocalRelation"), optimized
+
+    d = str(tmp_path / "idx")
+    build_index(spark, synth_pages(spark, 150, seed=42), d, tau=100,
+                n_buckets=4)
+    reader = IndexReader(spark, d)
+    assert reader.tombstones_df() is None
+    # warm the reader: its first request also lists the postings files
+    bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows)).collect()
+
+    sc = spark.sparkContext
+    group = "test-one-query-wand-request"
+    sc.setJobGroup(group, "one-query WAND request")
+    try:
+        df = bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows))
+        got = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert got and [r["rank"] for r in got] == list(range(1, len(got) + 1))
+    assert 0 < len(jobs) <= 6, jobs
+    assert "rangepartitioning" not in _plan(df).lower(), _plan(df)
