@@ -758,20 +758,8 @@ def q_simhash_neardup(spark, sf_dir):
 
 # ------------------------------------------------------------- text quality
 
-def q_token_count(spark, sf_dir):
-    return TQ.token_count(_read(spark, sf_dir, "documents"))
-
-
 def q_quality_score(spark, sf_dir):
     return TQ.quality_score(_read(spark, sf_dir, "documents"))
-
-
-def q_lang_id(spark, sf_dir):
-    return TQ.lang_id(_read(spark, sf_dir, "documents"))
-
-
-def q_fingerprint(spark, sf_dir):
-    return TQ.fingerprint(_read(spark, sf_dir, "documents")).select("doc_id", "md5")
 
 
 def q_text_metrics(spark, sf_dir):
@@ -780,15 +768,6 @@ def q_text_metrics(spark, sf_dir):
     token_count/quality_score/lang_id/fingerprint family: every formula is
     hash-verified jointly in a single shuffle-free projection."""
     return TQ.text_metrics(_read(spark, sf_dir, "documents"))
-
-
-def q_phrase_match(spark, sf_dir):
-    """ES match_phrase analog: docs containing the exact token phrase,
-    with occurrence counts (shingle-window equality, one shuffle)."""
-    from elasticsearch_data_import_handler_spark.operators.textsearch import (
-        phrase_match)
-
-    return phrase_match(_read(spark, sf_dir, "documents"), "the spark")
 
 
 def q_phrase_index(spark, sf_dir):
@@ -1281,17 +1260,6 @@ def _sig_only(spark, sf_dir):
                              min_doc_count=3, materialize=True)
 
 
-def q_term_expansion(spark, sf_dir):
-    """ES multi-term query expansion — fuzzy (edit distance ≤ 2), prefix,
-    and wildcard resolved against the vocabulary in one pass (subsumes the
-    round-2 ``fuzzy_match`` gate row; ``fuzzy_terms`` remains public API)."""
-    from elasticsearch_data_import_handler_spark.operators.textsearch import (
-        expand_terms)
-
-    return expand_terms(_read(spark, sf_dir, "documents"), fuzzy="sort",
-                        max_dist=2, prefix="sor", wildcard="s?rt*")
-
-
 def q_snippets(spark, sf_dir):
     """ES highlighter family in one tagged row: op='first' — fixed window
     around the first query hit (the previously-gated row verbatim);
@@ -1459,11 +1427,6 @@ def q_ann_topk(spark, sf_dir):
                                 n_queries=5, k=10, mode="pre")
           .withColumn("op", F.lit("filtered")))
     return ex.unionByName(ls).unionByName(fi)
-
-
-def q_embedding_neardup(spark, sf_dir):
-    return SIM.embedding_neardup_pairs(_read(spark, sf_dir, "embeddings"),
-                                       threshold=NEARDUP_COS)
 
 
 def q_geo(spark, sf_dir):
@@ -2072,24 +2035,6 @@ def q_window_running(spark, sf_dir):
         "o_custkey", "o_orderkey",
         F.round(F.sum("o_totalprice").over(w), 4).alias("running_total"),
     )
-
-
-def q_rollup_agg(spark, sf_dir):
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-    )
-
-
-def q_setops(spark, sf_dir):
-    cu = _read(spark, sf_dir, "customer")
-    od = _read(spark, sf_dir, "orders")
-    with_orders = od.select(F.col("o_custkey").alias("custkey")).distinct()
-    rich = cu.filter(F.col("c_acctbal") > 5000).select(
-        F.col("c_custkey").alias("custkey"))
-    return with_orders.intersect(rich)
 
 
 def q_events_json(spark, sf_dir):

@@ -61,7 +61,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.varbyte import (
     decode_posting_list,
-    encode_posting_list,
     varbyte_decode,
     _cumsum_with_block_resets,
     _block_starts,
@@ -118,25 +117,6 @@ def docs_versioned(pages: DataFrame, analyzer: dict | None = None) -> DataFrame:
         F.col("warc_ts"),
         jvm_tokens_col("text", analyzer).alias("tokens"),
     ).withColumn("doc_len", F.size("tokens"))
-
-
-def _postings_row(term, salt: int, bucket: int, doc_ids, tfs, dls) -> pd.DataFrame:
-    """One encoded postings row from per-doc (doc_id, tf, doc_len) arrays."""
-    enc = encode_posting_list(doc_ids, tfs, dls)
-    return pd.DataFrame(
-        [{
-            "term": term,
-            "salt": salt,
-            "n_docs": enc["n_docs"],
-            "block_max_doc": enc["block_max_doc"],
-            "block_max_tf": enc["block_max_tf"],
-            "block_min_dl": enc["block_min_dl"],
-            "off_d": enc["off_d"], "off_t": enc["off_t"], "off_l": enc["off_l"],
-            "doc_ids_vb": enc["doc_ids_vb"], "tfs_vb": enc["tfs_vb"],
-            "dls_vb": enc["dls_vb"],
-            "bucket": bucket,
-        }]
-    )
 
 
 def _encode_stream_factory(n_buckets: int, with_tf: bool = False):
@@ -504,8 +484,8 @@ def _write_lexicon_gen(spark: SparkSession, index_dir: str, batch_id: int,
                         or glob.glob(f"{pdir}/*.parquet"))
     cdir = f"{index_dir}/df_corrections/batch={batch_id}"
     # The driver path reads corrections from their materialized parquet dir
-    # (both callers write it before calling); an unmaterialized DataFrame
-    # forces the distributed path.
+    # (the commit tail writes it before calling; compaction passes none); an
+    # unmaterialized DataFrame forces the distributed path.
     corr_on_disk = batch_corr is not None and bool(glob.glob(f"{cdir}/*.parquet"))
 
     n_rows = 0
@@ -612,42 +592,30 @@ def _idf_expr(n_docs: int):
                  / (F.col("df") + F.lit(0.5)))
 
 
+def _docstats_dirs(index_dir: str, committed: list[int], part: str) -> list[str]:
+    """Non-empty ``doc_stats/batch=K/__t=<part>`` leaf dirs of the committed
+    batches: ``part="d"`` the doc rows, ``part="t"`` the tombstones.  Every
+    doc_stats writer goes through _write_doc_rows, so this is the one
+    layout; leaf dirs keep tombstone rows out of every doc-row scan (and
+    the reverse) by partition pruning on path alone."""
+    return [d for d in (f"{index_dir}/doc_stats/batch={b}/__t={part}"
+                        for b in committed)
+            if glob.glob(f"{d}/*.parquet")]
+
+
 def _read_tombstones(spark: SparkSession, index_dir: str, committed: list[int]):
-    """Tombstoned doc_ids across committed batches.  Tombstones live as the
-    ``__t=t`` partition of each batch's doc_stats dataset (written in the
-    same job as the doc rows — one action per commit); the standalone
-    ``tombstones/batch=K`` layout from older indexes is still honored."""
-    dirs = []
-    for b in committed:
-        d = f"{index_dir}/doc_stats/batch={b}/__t=t"
-        if glob.glob(f"{d}/*.parquet"):
-            dirs.append(d)
-        legacy = f"{index_dir}/tombstones/batch={b}"
-        if os.path.isdir(legacy) and glob.glob(f"{legacy}/*.parquet"):
-            dirs.append(legacy)
+    """Distinct tombstoned doc_ids across committed batches, read from the
+    ``__t=t`` doc_stats partitions that upserts and deletes write (None when
+    there are none)."""
+    dirs = _docstats_dirs(index_dir, committed, "t")
     if not dirs:
         return None
     return spark.read.parquet(*dirs).select("doc_id").distinct()
 
 
-def _docstats_dirs(index_dir: str, committed: list[int]) -> list[str]:
-    """Per-batch doc-row dirs: the ``__t=d`` partition when the batch was
-    written by the folded single-job path, else the flat legacy/compacted
-    layout.  Returning leaf dirs keeps tombstone rows out of every doc_stats
-    scan by partition pruning on path alone."""
-    out = []
-    for b in committed:
-        d = f"{index_dir}/doc_stats/batch={b}"
-        if glob.glob(f"{d}/__t=d/*.parquet"):
-            out.append(f"{d}/__t=d")
-        elif os.path.isdir(d) and glob.glob(f"{d}/*.parquet"):
-            out.append(d)
-    return out
-
-
 def _read_doc_stats(spark: SparkSession, index_dir: str,
                     committed: list[int]) -> DataFrame | None:
-    dirs = _docstats_dirs(index_dir, committed)
+    dirs = _docstats_dirs(index_dir, committed, "d")
     if not dirs:
         return None
     return spark.read.parquet(*dirs).select("doc_id", "url", "warc_ts",
@@ -736,6 +704,103 @@ def build_positions(docs: DataFrame, n_buckets: int,
                     F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int")))
 
 
+def _tombstone_rows(tombs: DataFrame) -> DataFrame:
+    """(doc_id, doc_len) tombstones as ``__t=t`` rows for _write_doc_rows."""
+    return tombs.select("doc_id", F.lit(None).cast("string").alias("url"),
+                        F.lit(None).cast("timestamp").alias("warc_ts"),
+                        "doc_len", F.lit("t").alias("__t"))
+
+
+def _write_doc_rows(rows: DataFrame, index_dir: str, batch_id: int) -> dict:
+    """The only writer of ``doc_stats/batch=K``.  ``rows`` are (doc_id, url,
+    warc_ts, doc_len, __t) with ``__t`` = ``d`` for a doc row and ``t`` for
+    a tombstone; ONE job writes both partitions while observing n_docs,
+    sum_dl, n_tombs and tomb_dl in flight (the Observation API keeps corpus
+    stats at zero extra passes and the tombstones at zero extra actions).
+    Overwrite-idempotent under the batch id."""
+    from pyspark.sql import Observation
+
+    def _sum(part: str, value):
+        return F.coalesce(F.sum(F.when(F.col("__t") == part, value)), F.lit(0))
+
+    obs = Observation(f"docstats_b{batch_id}")
+    (rows.observe(obs, _sum("d", F.lit(1)).alias("n_docs"),
+                  _sum("d", F.col("doc_len")).alias("sum_dl"),
+                  _sum("t", F.lit(1)).alias("n_tombs"),
+                  _sum("t", F.col("doc_len")).alias("tomb_dl"))
+     .write.mode("overwrite").partitionBy("__t")
+     .parquet(f"{index_dir}/doc_stats/batch={batch_id}"))
+    return {name: int(v) for name, v in obs.get.items()}
+
+
+def _commit_state(index_dir: str, st: IndexState, batch_id: int, t0: float,
+                  status: str, n_docs: int, n_postings: int,
+                  attempt: int) -> int:
+    """The commit point: a lineage row, then the atomic state flip that
+    makes ``batch_id`` visible.  Returns the wall ms the lineage records."""
+    wall_ms = int((time.time() - t0) * 1000)
+    append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(),
+                                           batch_id, status, n_docs,
+                                           n_postings, wall_ms, attempt)])
+    st.committed_batches = st.committed_batches + [batch_id]
+    st.last_indexed_batch = max(st.last_indexed_batch, batch_id)
+    write_state(index_dir, st)
+    return wall_ms
+
+
+def _commit_tail(spark: SparkSession, index_dir: str, st: IndexState,
+                 batch_id: int, observed: dict, t0: float,
+                 timings: dict, status: str, n_postings: int = 0,
+                 attempt: int = 1) -> int:
+    """Every phase after a batch's doc_stats (and postings) are written, for
+    commit_batch and delete_by_query alike: df corrections for the batch's
+    tombstones → corpus-stats delta → lexicon generation → lineage + state
+    flip → cstats fold → stale-generation cleanup.  ``observed`` is what
+    _write_doc_rows returned; ``st`` is the committed state the batch
+    builds on, with the settings to commit.  Every artifact before the flip
+    is overwrite-idempotent under ``batch_id`` and invisible until it, so a
+    crash anywhere before it leaves readers on the previous snapshot and a
+    retry with the same batch id lands once.  Records
+    ``timings["df_corrections"]`` and ``timings["stats_lexicon"]``; returns
+    the lineage wall ms."""
+    committed = list(st.committed_batches)
+    t_phase = time.time()
+    corr = None
+    if observed["n_tombs"]:
+        # the tombstones just materialized by _write_doc_rows — a vocab-free
+        # leaf-dir scan, instead of recomputing the plan that produced them
+        tombs = spark.read.parquet(
+            f"{index_dir}/doc_stats/batch={batch_id}/__t=t") \
+            .select("doc_id", "doc_len")
+        corr = _df_corrections_df(spark, index_dir, committed, tombs,
+                                  st.s_shards)
+        if corr is not None:
+            cdir = f"{index_dir}/df_corrections/batch={batch_id}"
+            corr.write.mode("overwrite").parquet(cdir)
+            # read the materialized result back (cheap, vocab-scale) so the
+            # lexicon job doesn't recompute the decode-explode plan
+            corr = spark.read.parquet(cdir)
+    timings["df_corrections"] = round(time.time() - t_phase, 2)
+    t_phase = time.time()
+    _write_cstats_delta(index_dir, batch_id,
+                        observed["n_docs"] - observed["n_tombs"],
+                        observed["sum_dl"] - observed["tomb_dl"])
+    _write_lexicon_gen(spark, index_dir, batch_id, committed, corr)
+    timings["stats_lexicon"] = round(time.time() - t_phase, 2)
+    wall_ms = _commit_state(index_dir, st, batch_id, t0, status,
+                            observed["n_docs"], n_postings, attempt)
+    # fold cstats deltas ONLY once the batch is durably committed — folding
+    # before the state flip would let a crash delete deltas for a batch set
+    # the checkpoint can never apply to (its set ⊄ any future committed list)
+    _maybe_fold_cstats(index_dir, st.committed_batches)
+    # best-effort: drop lexicon generations older than the previous one
+    # (kept so an in-flight reader of gen K-1 doesn't lose its files mid-scan)
+    prev = _latest_lexicon_gen(index_dir, committed)
+    if prev is not None:
+        _cleanup_stale_gens(index_dir, prev)
+    return wall_ms
+
+
 def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
                  batch_id: int, tau: int = 100_000, n_buckets: int = 8,
                  s_shards: int | None = None, attempt: int = 1,
@@ -748,8 +813,6 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     (a conflicting override raises — an index has one analysis chain).
     ``positions=True`` additionally writes the positional postings table
     (phrase queries); persisted in state like the analyzer."""
-    from pyspark.sql import Observation
-
     t0 = time.time()
     st = read_state(index_dir) or IndexState(n_buckets=n_buckets,
                                              build_id=new_build_id())
@@ -796,48 +859,21 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     kept, tombs = _resolve_upserts(docs, existing)
     kept = kept.persist()
 
-    # ONE job writes BOTH doc rows and tombstones (partitions __t=d / __t=t
-    # of the same dataset) while observing all four scalars in-flight — the
-    # round-2 layout spent a second action (+ full plan recompute) on the
-    # tombstone write; folding it shaves the per-commit Amdahl constant and
-    # the Observation API keeps corpus stats at zero extra passes
     timings: dict[str, float] = {}
     t_phase = time.time()
-    obs = Observation(f"docstats_b{batch_id}")
-    out_rows = kept.select("doc_id", "url", "warc_ts", "doc_len",
-                           F.lit("d").alias("__t"))
+    rows = kept.select("doc_id", "url", "warc_ts", "doc_len",
+                       F.lit("d").alias("__t"))
     if tombs is not None:
-        out_rows = out_rows.unionByName(tombs.select(
-            "doc_id", F.lit(None).cast("string").alias("url"),
-            F.lit(None).cast("timestamp").alias("warc_ts"), "doc_len",
-            F.lit("t").alias("__t")))
-    (out_rows
-     .observe(obs,
-              F.coalesce(F.sum(F.when(F.col("__t") == "d", 1)),
-                         F.lit(0)).alias("n_docs"),
-              F.coalesce(F.sum(F.when(F.col("__t") == "d", F.col("doc_len"))),
-                         F.lit(0)).alias("sum_dl"),
-              F.coalesce(F.sum(F.when(F.col("__t") == "t", 1)),
-                         F.lit(0)).alias("n_tombs"),
-              F.coalesce(F.sum(F.when(F.col("__t") == "t", F.col("doc_len"))),
-                         F.lit(0)).alias("tomb_dl"))
-     .write.mode("overwrite").partitionBy("__t")
-     .parquet(f"{index_dir}/doc_stats/batch={batch_id}"))
-    observed = obs.get
+        rows = rows.unionByName(_tombstone_rows(tombs))
+    observed = _write_doc_rows(rows, index_dir, batch_id)
     timings["doc_stats"] = round(time.time() - t_phase, 2)
-    n_docs = int(observed["n_docs"])
-    sum_dl_new = int(observed["sum_dl"])
+    n_docs = observed["n_docs"]
     if n_docs == 0:
         # nothing new (e.g. idempotent re-import of an already-indexed window);
         # kept empty ⇒ tombs empty (a tombstoning row is always also kept)
         kept.unpersist()
-        wall_ms = int((time.time() - t0) * 1000)
-        append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(),
-                                               batch_id, "done", 0, 0, wall_ms,
-                                               attempt)])
-        st.committed_batches = committed + [batch_id]
-        st.last_indexed_batch = max(st.last_indexed_batch, batch_id)
-        write_state(index_dir, st)
+        wall_ms = _commit_state(index_dir, st, batch_id, t0, "done", 0, 0,
+                                attempt)
         return {"n_docs": 0, "n_posting_rows": 0, "wall_ms": wall_ms,
                 "s_shards": st.s_shards, "batch_id": batch_id, "n_tombstones": 0}
     if s_shards is None:
@@ -846,9 +882,6 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
         else:
             s_shards = _next_pow2(max(1, (n_docs + tau - 1) // tau))
 
-    # tombstone counts came out of the same Observation — no second action
-    n_tombs = int(observed["n_tombs"])
-    tomb_dl = int(observed["tomb_dl"])
     t_phase = time.time()
     # Size the encode shuffle from the DATA, not the core count: sum_dl is
     # the exact occurrence count (already observed during the doc_stats
@@ -857,7 +890,7 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     # partition count went 2.5-3× slower; data-sized partitions restore
     # linear scaling).  This is the local-mode analog of
     # spark.sql.files.maxPartitionBytes-driven sizing on a cluster.
-    occ_bytes = sum_dl_new * 48
+    occ_bytes = observed["sum_dl"] * 48
     dp = spark.sparkContext.defaultParallelism
     # tiny-input floor (guide §6): below ~16 MB/partition the dp floor only
     # fragments the output — a 5k-doc index came out as ~240 files whose
@@ -890,55 +923,15 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
         f"{index_dir}/postings/batch={batch_id}", format="parquet",
         partitioning="hive").count_rows()
     timings["footer_count"] = round(time.time() - t_phase, 2)
-
-    t_phase = time.time()
-    corr = None
-    if n_tombs:
-        # read the tombstones just materialized by the folded write — a
-        # vocab-free leaf-dir scan, instead of recomputing the upsert join
-        tombs_mat = spark.read.parquet(
-            f"{index_dir}/doc_stats/batch={batch_id}/__t=t") \
-            .select("doc_id", "doc_len")
-        corr = _df_corrections_df(spark, index_dir, committed, tombs_mat,
-                                  s_shards)
-        if corr is not None:
-            corr.write.mode("overwrite").parquet(
-                f"{index_dir}/df_corrections/batch={batch_id}")
-            # read the materialized result back (cheap, vocab-scale) so the
-            # lexicon job doesn't recompute the decode-explode plan
-            corr = spark.read.parquet(f"{index_dir}/df_corrections/batch={batch_id}")
-
-    timings["df_corrections"] = round(time.time() - t_phase, 2)
-    t_phase = time.time()
-    committed_now = committed + [batch_id]
-    # corpus stats: overwrite-idempotent per-batch delta, committed-gated read
-    _write_cstats_delta(index_dir, batch_id, n_docs - n_tombs,
-                        sum_dl_new - tomb_dl)
-    _write_lexicon_gen(spark, index_dir, batch_id, committed, corr)
-    timings["stats_lexicon"] = round(time.time() - t_phase, 2)
     kept.unpersist()
 
-    wall_ms = int((time.time() - t0) * 1000)
-    append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(), batch_id,
-                                           "done", n_docs, n_posting_rows, wall_ms,
-                                           attempt)])
-    st.committed_batches = committed_now
-    st.last_indexed_batch = max(st.last_indexed_batch, batch_id)
     st.s_shards = s_shards
     st.n_buckets = n_buckets
-    write_state(index_dir, st)
-    # fold cstats deltas ONLY once the batch is durably committed — folding
-    # before the state flip would let a crash delete deltas for a batch set
-    # the checkpoint can never apply to (its set ⊄ any future committed list)
-    _maybe_fold_cstats(index_dir, committed_now)
-    # best-effort: drop lexicon generations older than the previous one
-    # (kept so an in-flight reader of gen K-1 doesn't lose its files mid-scan)
-    prev = _latest_lexicon_gen(index_dir, committed)
-    if prev is not None:
-        _cleanup_stale_gens(index_dir, prev)
+    wall_ms = _commit_tail(spark, index_dir, st, batch_id, observed, t0,
+                           timings, "done", n_posting_rows, attempt)
     return {"n_docs": n_docs, "n_posting_rows": n_posting_rows,
             "wall_ms": wall_ms, "s_shards": s_shards, "batch_id": batch_id,
-            "n_tombstones": n_tombs, "timings": timings}
+            "n_tombstones": observed["n_tombs"], "timings": timings}
 
 
 def build_index(spark: SparkSession, pages: DataFrame, index_dir: str,
@@ -1053,18 +1046,18 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
     immediately via the cogrouped tombstone path, :func:`compact_index`
     reclaims the bytes later, exactly like ES's delete + forcemerge.
 
-    Commits as a regular batch so every invariant holds downstream:
-    tombstones land in ``doc_stats/batch=K/__t=t`` (one job, Observation
-    counts), exact per-term df decrements via the same salt-pruned
-    decode-explode as upsert tombstones, corpus-stats delta, a new lexicon
-    generation, lineage row, state flip last.  Crash-safe for the same
-    reason commits are: every artifact is overwrite-idempotent under the
-    batch id and readers are gated on committed state.
+    Commits as a regular batch through the same code as an upsert: the
+    victims' tombstones land in ``doc_stats/batch=K/__t=t`` via
+    _write_doc_rows (one job, observed counts), then _commit_tail runs the
+    exact per-term df decrements (the same salt-pruned decode-explode as
+    upsert tombstones), corpus-stats delta, a new lexicon generation, a
+    ``delete`` lineage row and the state flip last.  Crash-safe for the
+    same reason commits are: every artifact is overwrite-idempotent under
+    the batch id and readers are gated on committed state.  A query that
+    matches nothing writes nothing and returns ``batch_id=None``.
 
     Cost: O(Σ df of the query terms) to find victims + O(victim-shards'
     postings) for the df corrections — never a corpus scan."""
-    from pyspark.sql import Observation
-
     from ..operators.textsearch import bool_query
 
     t0 = time.time()
@@ -1072,61 +1065,25 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
         st = read_state(index_dir)
         if st is None or not st.committed_batches:
             raise ValueError(f"no committed index at {index_dir}")
-        committed = list(st.committed_batches)
         batch_id = st.last_indexed_batch + 1
         reader = IndexReader(spark, index_dir)
         victims = bool_query(spark, reader, must=must, should=should,
                              must_not=must_not,
                              min_should=min_should).select("doc_id")
-        ds = _read_doc_stats(spark, index_dir, committed) \
+        ds = _read_doc_stats(spark, index_dir, st.committed_batches) \
             .select("doc_id", "doc_len")
-        tombs = victims.join(ds, "doc_id")
-
-        obs = Observation(f"delete_b{batch_id}")
-        (tombs.select("doc_id",
-                      F.lit(None).cast("string").alias("url"),
-                      F.lit(None).cast("timestamp").alias("warc_ts"),
-                      "doc_len", F.lit("t").alias("__t"))
-         .observe(obs,
-                  F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n_tombs"),
-                  F.coalesce(F.sum("doc_len"), F.lit(0)).alias("tomb_dl"))
-         .write.mode("overwrite").partitionBy("__t")
-         .parquet(f"{index_dir}/doc_stats/batch={batch_id}"))
-        n_tombs = int(obs.get["n_tombs"])
-        tomb_dl = int(obs.get["tomb_dl"])
-        if n_tombs == 0:
+        observed = _write_doc_rows(_tombstone_rows(victims.join(ds, "doc_id")),
+                                   index_dir, batch_id)
+        if observed["n_tombs"] == 0:
             import shutil
 
             shutil.rmtree(f"{index_dir}/doc_stats/batch={batch_id}",
                           ignore_errors=True)
             return {"n_tombstones": 0, "batch_id": None,
                     "wall_ms": int((time.time() - t0) * 1000)}
-
-        tombs_mat = spark.read.parquet(
-            f"{index_dir}/doc_stats/batch={batch_id}/__t=t") \
-            .select("doc_id", "doc_len")
-        corr = _df_corrections_df(spark, index_dir, committed, tombs_mat,
-                                  st.s_shards)
-        if corr is not None:
-            corr.write.mode("overwrite").parquet(
-                f"{index_dir}/df_corrections/batch={batch_id}")
-            corr = spark.read.parquet(
-                f"{index_dir}/df_corrections/batch={batch_id}")
-        _write_cstats_delta(index_dir, batch_id, -n_tombs, -tomb_dl)
-        _write_lexicon_gen(spark, index_dir, batch_id, committed, corr)
-
-        wall_ms = int((time.time() - t0) * 1000)
-        append_lineage(index_dir, [lineage_row(st.build_id, batch_id,
-                                               "delete", 0, 0, wall_ms, 1)])
-        committed_now = committed + [batch_id]
-        st.committed_batches = committed_now
-        st.last_indexed_batch = batch_id
-        write_state(index_dir, st)
-        _maybe_fold_cstats(index_dir, committed_now)
-        prev = _latest_lexicon_gen(index_dir, committed)
-        if prev is not None:
-            _cleanup_stale_gens(index_dir, prev)
-        return {"n_tombstones": n_tombs, "batch_id": batch_id,
+        wall_ms = _commit_tail(spark, index_dir, st, batch_id, observed, t0,
+                               {}, "delete")
+        return {"n_tombstones": observed["n_tombs"], "batch_id": batch_id,
                 "wall_ms": wall_ms}
 
 
@@ -1135,6 +1092,13 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     (the Lucene merge analog).  Exact and fully distributed: decode-explode
     every posting, anti-join tombstones, re-encode through the same
     single-shuffle streaming kernel as the build.
+
+    Runs under the index's BuildLock like every other mutator (it raises
+    RuntimeError when another writer holds it), so no commit can land
+    between reading the committed state and flipping it.  The active docs
+    go through the same doc_stats writer as commits (``__t=d`` partition,
+    no tombstones left) and the lexicon through the same generation writer
+    (no previous generation, no corrections).
 
     Crash-safe commit protocol: the compacted segment is written under a NEW
     batch id (max committed + 1); the state flip to ``committed=[NEW]`` is
@@ -1145,113 +1109,106 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     pass below or a later compaction removes."""
     import shutil
 
-    st = read_state(index_dir)
-    if st is None:
-        raise FileNotFoundError(index_dir)
-    committed = st.committed_batches
-    new_b = max(committed) + 1
-    tomb = _read_tombstones(spark, index_dir, committed)
-    ds = _read_doc_stats(spark, index_dir, committed)
-    active = ds.join(tomb, "doc_id", "left_anti") if tomb is not None else ds
+    with BuildLock(index_dir):
+        st = read_state(index_dir)
+        if st is None:
+            raise FileNotFoundError(index_dir)
+        committed = st.committed_batches
+        new_b = max(committed) + 1
+        tomb = _read_tombstones(spark, index_dir, committed)
+        ds = _read_doc_stats(spark, index_dir, committed)
+        active = ds.join(tomb, "doc_id", "left_anti") if tomb is not None else ds
 
-    post = spark.read.option("basePath", f"{index_dir}/postings").parquet(
-        *_batch_dirs(index_dir, "postings", committed))
+        post = spark.read.option("basePath", f"{index_dir}/postings").parquet(
+            *_batch_dirs(index_dir, "postings", committed))
 
-    def _decode_full(it):
-        for pdf in it:
-            outs = []
-            for term, salt, dvb, tvb, lvb in zip(
-                    pdf["term"], pdf["salt"], pdf["doc_ids_vb"],
-                    pdf["tfs_vb"], pdf["dls_vb"]):
-                d, t, l = decode_posting_list(dvb, tvb, lvb)
-                outs.append(pd.DataFrame({
-                    "term_id": np.full(d.size, 0, np.int64),  # filled below
-                    "term": np.repeat(term, d.size),
-                    "salt": np.full(d.size, salt, np.int32),
-                    "doc_id": d, "tf": t, "doc_len": l}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+        def _decode_full(it):
+            for pdf in it:
+                outs = []
+                for term, salt, dvb, tvb, lvb in zip(
+                        pdf["term"], pdf["salt"], pdf["doc_ids_vb"],
+                        pdf["tfs_vb"], pdf["dls_vb"]):
+                    d, t, l = decode_posting_list(dvb, tvb, lvb)
+                    outs.append(pd.DataFrame({
+                        "term_id": np.full(d.size, 0, np.int64),  # filled below
+                        "term": np.repeat(term, d.size),
+                        "salt": np.full(d.size, salt, np.int32),
+                        "doc_id": d, "tf": t, "doc_len": l}))
+                if outs:
+                    yield pd.concat(outs, ignore_index=True)
 
-    decoded = post.select("term", "salt", "doc_ids_vb", "tfs_vb", "dls_vb") \
-        .mapInPandas(_decode_full,
-                     schema="term_id bigint, term string, salt int, "
-                            "doc_id bigint, tf int, doc_len int") \
-        .withColumn("term_id", F.xxhash64("term")).drop("term")
-    if tomb is not None:
-        decoded = decoded.join(tomb, "doc_id", "left_anti")
-    # Size the re-encode shuffle from the DATA, not the core count — the
-    # same ~48 B/occurrence rule as commit_batch: compaction folds the WHOLE
-    # index, so a core-count partition count is the first thing to spill at
-    # scale.  Committed cstats already hold the active occurrence total
-    # (tombstoned doc_len subtracted at commit time) — a driver-side
-    # metadata read, no extra job.
-    _, sum_dl_active = _read_cstats(index_dir, committed)
-    dp = spark.sparkContext.defaultParallelism
-    p = max(dp, int(sum_dl_active) * 48 // (128 << 20) + 1)
-    # full final wave (same quantization rule as commit_batch's p_enc)
-    p = ((p + dp - 1) // dp) * dp
-    part = (decoded.repartition(p, "term_id", "salt")
-            .sortWithinPartitions("term_id", "salt", "doc_id"))
-    enc = part.mapInPandas(_encode_stream_factory(st.n_buckets, with_tf=True),
-                           schema=POSTINGS_ENC_SCHEMA)
-    terms = post.select("term").distinct().select(
-        "term", F.xxhash64("term").alias("term_id"))
-    merged = enc.join(terms, "term_id").drop("term_id")
+        decoded = post.select("term", "salt", "doc_ids_vb", "tfs_vb", "dls_vb") \
+            .mapInPandas(_decode_full,
+                         schema="term_id bigint, term string, salt int, "
+                                "doc_id bigint, tf int, doc_len int") \
+            .withColumn("term_id", F.xxhash64("term")).drop("term")
+        if tomb is not None:
+            decoded = decoded.join(tomb, "doc_id", "left_anti")
+        # Size the re-encode shuffle from the DATA, not the core count — the
+        # same ~48 B/occurrence rule as commit_batch: compaction folds the WHOLE
+        # index, so a core-count partition count is the first thing to spill at
+        # scale.  Committed cstats already hold the active occurrence total
+        # (tombstoned doc_len subtracted at commit time) — a driver-side
+        # metadata read, no extra job.
+        _, sum_dl_active = _read_cstats(index_dir, committed)
+        dp = spark.sparkContext.defaultParallelism
+        p = max(dp, int(sum_dl_active) * 48 // (128 << 20) + 1)
+        # full final wave (same quantization rule as commit_batch's p_enc)
+        p = ((p + dp - 1) // dp) * dp
+        part = (decoded.repartition(p, "term_id", "salt")
+                .sortWithinPartitions("term_id", "salt", "doc_id"))
+        enc = part.mapInPandas(_encode_stream_factory(st.n_buckets, with_tf=True),
+                               schema=POSTINGS_ENC_SCHEMA)
+        terms = post.select("term").distinct().select(
+            "term", F.xxhash64("term").alias("term_id"))
+        merged = enc.join(terms, "term_id").drop("term_id")
 
-    # positional postings fold into the new generation too: concat batch
-    # segments, drop tombstoned docs, rewrite (rows are already unique per
-    # (term, doc) across segments — a doc version lives in one batch)
-    if st.has_positions:
-        pdirs = _batch_dirs(index_dir, "positions", committed)
-        if pdirs:
-            posd = spark.read.option(
-                "basePath", f"{index_dir}/positions").parquet(*pdirs) \
-                .select("term_id", "doc_id", "n_pos", "pos_vb", "bucket")
-            if tomb is not None:
-                posd = posd.join(tomb, "doc_id", "left_anti")
-            posd.write.mode("overwrite").partitionBy("bucket").parquet(
-                f"{index_dir}/positions/batch={new_b}")
+        # positional postings fold into the new generation too: concat batch
+        # segments, drop tombstoned docs, rewrite (rows are already unique per
+        # (term, doc) across segments — a doc version lives in one batch)
+        if st.has_positions:
+            pdirs = _batch_dirs(index_dir, "positions", committed)
+            if pdirs:
+                posd = spark.read.option(
+                    "basePath", f"{index_dir}/positions").parquet(*pdirs) \
+                    .select("term_id", "doc_id", "n_pos", "pos_vb", "bucket")
+                if tomb is not None:
+                    posd = posd.join(tomb, "doc_id", "left_anti")
+                posd.write.mode("overwrite").partitionBy("bucket").parquet(
+                    f"{index_dir}/positions/batch={new_b}")
 
-    # materialize the new generation (both datasets) before the state flip
-    from pyspark.sql import Observation
-    obs = Observation(f"compact_b{new_b}")
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{index_dir}/postings/batch={new_b}")
-    (active.select("doc_id", "url", "warc_ts", "doc_len")
-     .observe(obs, F.count(F.lit(1)).alias("n_docs"),
-              F.coalesce(F.sum("doc_len"), F.lit(0)).alias("sum_dl"))
-     .write.mode("overwrite").parquet(f"{index_dir}/doc_stats/batch={new_b}"))
-    n_active = int(obs.get["n_docs"])
-    sum_active = int(obs.get["sum_dl"])
-    _write_cstats_delta(index_dir, new_b, n_active, sum_active)
-    # post-compaction lexicon = segment metadata sums (no corrections left)
-    lex = (spark.read.parquet(f"{index_dir}/postings/batch={new_b}")
-           .groupBy("term").agg(F.sum("n_docs").cast("long").alias("df"))
-           .filter(F.col("df") > 0))
-    lex.write.mode("overwrite").parquet(_lexicon_gen_dir(index_dir, new_b))
+        # materialize the new generation (both datasets) before the state flip
+        merged.write.mode("overwrite").partitionBy("bucket").parquet(
+            f"{index_dir}/postings/batch={new_b}")
+        observed = _write_doc_rows(
+            active.select("doc_id", "url", "warc_ts", "doc_len",
+                          F.lit("d").alias("__t")), index_dir, new_b)
+        _write_cstats_delta(index_dir, new_b, observed["n_docs"],
+                            observed["sum_dl"])
+        # post-compaction lexicon = segment metadata sums (no corrections left)
+        _write_lexicon_gen(spark, index_dir, new_b, [], None)
 
-    # --- atomic commit point ---
-    st.committed_batches = [new_b]
-    st.last_indexed_batch = new_b
-    write_state(index_dir, st)
+        # --- atomic commit point ---
+        st.committed_batches = [new_b]
+        st.last_indexed_batch = new_b
+        write_state(index_dir, st)
 
-    # cleanup (crash-tolerant: everything below is invisible to readers)
-    for b in committed:
-        shutil.rmtree(f"{index_dir}/postings/batch={b}", ignore_errors=True)
-        shutil.rmtree(f"{index_dir}/doc_stats/batch={b}", ignore_errors=True)
-        shutil.rmtree(f"{index_dir}/positions/batch={b}", ignore_errors=True)
-        p_delta = _cstats_delta_path(index_dir, b)
-        if os.path.exists(p_delta):
-            os.remove(p_delta)
-    for ckpt in _cstats_ckpts(index_dir):
-        os.remove(ckpt)  # they cover pre-compaction batch sets only
-    shutil.rmtree(f"{index_dir}/tombstones", ignore_errors=True)
-    shutil.rmtree(f"{index_dir}/df_corrections", ignore_errors=True)
-    _cleanup_stale_gens(index_dir, new_b)
-    import pyarrow.dataset as _ds
-    return {"n_posting_rows": _ds.dataset(
-        f"{index_dir}/postings/batch={new_b}", format="parquet",
-        partitioning="hive").count_rows(), "batch_id": new_b}
+        # cleanup (crash-tolerant: everything below is invisible to readers)
+        for b in committed:
+            shutil.rmtree(f"{index_dir}/postings/batch={b}", ignore_errors=True)
+            shutil.rmtree(f"{index_dir}/doc_stats/batch={b}", ignore_errors=True)
+            shutil.rmtree(f"{index_dir}/positions/batch={b}", ignore_errors=True)
+            p_delta = _cstats_delta_path(index_dir, b)
+            if os.path.exists(p_delta):
+                os.remove(p_delta)
+        for ckpt in _cstats_ckpts(index_dir):
+            os.remove(ckpt)  # they cover pre-compaction batch sets only
+        shutil.rmtree(f"{index_dir}/df_corrections", ignore_errors=True)
+        _cleanup_stale_gens(index_dir, new_b)
+        import pyarrow.dataset as _ds
+        return {"n_posting_rows": _ds.dataset(
+            f"{index_dir}/postings/batch={new_b}", format="parquet",
+            partitioning="hive").count_rows(), "batch_id": new_b}
 
 
 class IndexReader:
@@ -1347,11 +1304,8 @@ class IndexReader:
         post_rows, post_bytes = _rows_bytes("postings")
         pos_rows, pos_bytes = (_rows_bytes("positions")
                                if self.state.has_positions else (0, 0))
-        tomb_dirs = [d for b in committed
-                     for d in glob.glob(
-                         f"{self.index_dir}/doc_stats/batch={b}/__t=t")]
         n_tombs = sum(_ds.dataset(d, format="parquet").count_rows()
-                      for d in tomb_dirs)
+                      for d in _docstats_dirs(self.index_dir, committed, "t"))
         return {
             "n_docs": n_docs,
             "sum_doc_len": sum_dl,

@@ -124,32 +124,62 @@ def test_compaction_reclaims_deleted(spark, deleted_and_clean):
     assert got == _topk(spark, clean_dir)
 
 
+def _upsert_newer(spark, d):
+    """An upsert commit (batch 1) whose batch tombstones older versions:
+    every version of a fifth of the base urls, re-imported one day newer.
+    Returns (run, n_tombstones, n_docs after the commit)."""
+    from elasticsearch_data_import_handler_spark.plans.build import commit_batch
+    from elasticsearch_data_import_handler_spark.plans.state import BuildLock
+
+    newer = (synth_pages(spark, 200, seed=42)
+             .filter(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
+             .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")))
+
+    def run():
+        with BuildLock(d):
+            res = commit_batch(spark, newer, d, 1, tau=100, n_buckets=4)
+        return res["n_tombstones"], res["batch_id"]
+
+    n_docs = IndexReader(spark, d).corpus_stats().first()["n_docs"]
+    return run, newer.select("url").distinct().count(), n_docs
+
+
+def _delete_merge(spark, d):
+    """delete_by_query on a term: returns (run, n_tombstones, n_docs after)."""
+    def run():
+        res = delete_by_query(spark, d, must=["merge"])
+        return res["n_tombstones"], res["batch_id"]
+
+    reader = IndexReader(spark, d)
+    n_victims = bool_query(spark, reader, must=["merge"]).count()
+    return run, n_victims, reader.corpus_stats().first()["n_docs"] - n_victims
+
+
+@pytest.mark.parametrize("phase", ["_df_corrections_df", "_write_lexicon_gen"])
+@pytest.mark.parametrize("op", ["delete_by_query", "commit_batch"])
 def test_delete_crash_before_state_flip_is_invisible_then_retryable(
-        spark, tmp_path_factory):
-    """Kill the delete after the tombstone write but before the state flip:
-    readers (gated on committed state) must see NOTHING changed; the retry
-    reuses the same batch id and lands the delete exactly once."""
+        spark, tmp_path_factory, monkeypatch, op, phase):
+    """Kill a tombstoning commit (a delete, or an upsert commit) inside the
+    shared commit tail — after its tombstones are written, before the state
+    flip: readers (gated on committed state) must see NOTHING changed; the
+    retry reuses the same batch id and lands exactly once."""
     import elasticsearch_data_import_handler_spark.plans.build as B
 
     d = str(tmp_path_factory.mktemp("dbq_crash"))
     build_index(spark, synth_pages(spark, 200, seed=42), d, tau=100,
                 n_buckets=4)
     before = _topk(spark, d)
-    n_victims = bool_query(spark, IndexReader(spark, d),
-                           must=["merge"]).count()
-    assert n_victims > 0
-
-    real = B._df_corrections_df
+    prepare = _delete_merge if op == "delete_by_query" else _upsert_newer
+    run, n_tombs, n_docs_after = prepare(spark, d)
+    assert n_tombs > 0
 
     def boom(*a, **k):
         raise RuntimeError("injected crash")
 
-    B._df_corrections_df = boom
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            delete_by_query(spark, d, must=["merge"])
-    finally:
-        B._df_corrections_df = real
+    monkeypatch.setattr(B, phase, boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run()
+    monkeypatch.undo()
 
     # uncommitted tombstones are invisible: same state, same results
     st = read_state(d)
@@ -158,9 +188,11 @@ def test_delete_crash_before_state_flip_is_invisible_then_retryable(
     assert IndexReader(spark, d).tombstones_df() is None
 
     # retry: same batch id, overwrite-idempotent artifacts, lands once
-    res = delete_by_query(spark, d, must=["merge"])
-    assert res["n_tombstones"] == n_victims and res["batch_id"] == 1
+    assert run() == (n_tombs, 1)
     assert read_state(d).committed_batches == [0, 1]
-    got = _topk(spark, d)
-    assert got != before
+    assert (read_lineage(d)["batch_id"] == 1).sum() == 1
+    reader = IndexReader(spark, d)
+    assert reader.corpus_stats().first()["n_docs"] == n_docs_after
+    assert reader.tombstones_df().count() == n_tombs
+    assert _topk(spark, d) != before
     shutil.rmtree(d, ignore_errors=True)

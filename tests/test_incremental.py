@@ -257,6 +257,25 @@ def test_kill_during_compaction_recovers(spark, tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
 
 
+def test_compaction_takes_build_lock(spark, tmp_path_factory):
+    """Compaction is a mutator like any commit: while another writer holds
+    the index's BuildLock it must refuse to run (A7 abort) and leave the
+    committed state untouched, instead of racing that writer for the next
+    batch id and flipping the state over its batch."""
+    from elasticsearch_data_import_handler_spark.plans.state import BuildLock
+
+    d = str(tmp_path_factory.mktemp("compactlock"))
+    b0 = synth_pages(spark, 60, seed=42, batches=2, batch=0)
+    b1 = synth_pages(spark, 60, seed=42, batches=2, batch=1)
+    build_incremental(spark, [b0, b1], d, tau=100, n_buckets=4)
+    before = read_state(d).committed_batches
+    with BuildLock(d):
+        with pytest.raises(RuntimeError, match="locked"):
+            compact_index(spark, d)
+        assert read_state(d).committed_batches == before
+    shutil.rmtree(d, ignore_errors=True)
+
+
 def test_analyzer_settings_surface(spark, tmp_path_factory):
     """A8: per-index analyzer config (stopwords here) persists in state and
     changes the indexed terms; a conflicting override on a later batch fails."""
@@ -315,9 +334,12 @@ def test_cstats_fold_bounds_file_reads(tmp_path_factory):
 
 
 def test_commit_after_compaction_mixes_layouts(spark, tmp_path_factory):
-    """A compacted generation stores doc_stats flat; later commits store the
-    partitioned __t=d/__t=t layout.  Readers must resolve the mixed layouts
-    (and upserts against a compacted index must still tombstone)."""
+    """A compacted generation and the commits after it share one doc_stats
+    layout: compaction writes its active docs as the __t=d partition (no
+    flat files), later upserts write __t=d plus __t=t tombstones.  Readers
+    span the compacted and the new batch, and upserts against a compacted
+    index must still tombstone."""
+    import glob
     import os
 
     d = str(tmp_path_factory.mktemp("mixlayout"))
@@ -329,7 +351,10 @@ def test_commit_after_compaction_mixes_layouts(spark, tmp_path_factory):
     from elasticsearch_data_import_handler_spark.plans.build import commit_batch
     from elasticsearch_data_import_handler_spark.plans.state import BuildLock
     st = read_state(d)
-    nb = max(st.committed_batches) + 1
+    cb = max(st.committed_batches)
+    assert os.path.isdir(f"{d}/doc_stats/batch={cb}/__t=d")
+    assert glob.glob(f"{d}/doc_stats/batch={cb}/*.parquet") == []
+    nb = cb + 1
     bump = full.withColumn(
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
     with BuildLock(d):
@@ -337,7 +362,7 @@ def test_commit_after_compaction_mixes_layouts(spark, tmp_path_factory):
     reader = IndexReader(spark, d)
     assert os.path.isdir(f"{d}/doc_stats/batch={nb}/__t=d")
     assert reader.tombstones_df() is not None       # upsert tombstoned
-    # doc_stats spans both layouts; active doc count is unchanged
+    # doc_stats spans both batches; active doc count is unchanged
     tomb = reader.tombstones_df()
     active = reader.doc_stats().join(tomb, "doc_id", "left_anti")
     assert active.count() == 120
